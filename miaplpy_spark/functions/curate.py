@@ -6,9 +6,11 @@ connected components, and token accounting (q18) — into one
 DataFrame graph with a per-doc keep/drop decision and the REASON.
 
 Plan shape at 100 TB: every stage is one of the already-audited
-plans (one exchange each, no Python in the hot path except the
-bounded component loop over the pair graph, which is orders of
-magnitude smaller than the corpus); the final assembly is left joins
+plans (one exchange each) and curation starts no Python worker. The
+only Python is the driver's union-find over the pair graph when it is
+under ``driver_max_edges`` (orders of magnitude smaller than the
+corpus); its labels enter the plan as an Arrow ``LocalTableScan``
+(``session.local_frame``). The final assembly is left joins
 of doc-keyed side outputs back onto the doc spine — each side is a
 per-doc aggregate (same cardinality). The assembly joins shuffle on
 ``doc_key = xxhash64(doc_id)`` (plus ``doc_key2`` under

@@ -24,6 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from .text import shingles
 
 SIMHASH_BITS = 48  # one 12-hex-char md5 chunk = an exact 48-bit integer
@@ -203,7 +204,7 @@ def build_minhash_index(spark, sf_dir: str, index_dir: str,
     (d.select("doc_id", exact_fingerprint().alias("fp"))
      .write.mode("overwrite").parquet(f"{index_dir}/fingerprints"))
     params = {"n_perm": n_perm, "bands": bands, "k": k}
-    (spark.createDataFrame([(json.dumps(params),)], "p string")
+    (local_frame(spark, [(json.dumps(params),)], "p string")
      .coalesce(1).write.mode("overwrite").text(f"{index_dir}/params"))
     return sig_r.count()
 
@@ -469,8 +470,7 @@ def _driver_components(e: DataFrame, rows=None) -> DataFrame:
         comp_min[root] = node if cur is None else min(cur, node)
     out = [(n, comp_min[find(n)]) for n in parent]
     t = e.schema["c"].dataType.simpleString()
-    return e.sparkSession.createDataFrame(
-        out, f"node {t}, comp {t}")
+    return local_frame(e.sparkSession, out, f"node {t}, comp {t}")
 
 
 def _star_components(pairs: DataFrame, id1: str, id2: str,

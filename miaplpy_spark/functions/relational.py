@@ -13,6 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..session import local_frame
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -155,9 +157,9 @@ def delaunay_network(spark, sf_dir, max_temporal_days: float = 14.0,
     pairs = delaunay_pairs(t, b, max_temporal_days, max_perp)
     rows = [(days[i]["d"], days[j]["d"], int(t[j] - t[i]),
              float(round(abs(b[j] - b[i]), 6))) for i, j in pairs]
-    return spark.createDataFrame(
-        rows, "day1 timestamp, day2 timestamp, dt_days bigint, "
-              "bperp_diff double")
+    return local_frame(
+        spark, rows, "day1 timestamp, day2 timestamp, dt_days bigint, "
+                     "bperp_diff double")
 
 
 def ministack_network(spark, sf_dir) -> DataFrame:

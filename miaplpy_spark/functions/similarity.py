@@ -16,6 +16,8 @@ import hashlib
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -430,7 +432,7 @@ def ivf_build_index(spark, sf_dir, index_dir: str, n_cells: int = 16,
     # index works on any filesystem the session can write (posix,
     # file:, hdfs://, s3a://) — a driver-side open() would be
     # posix-only, the portability gap TierStore just closed
-    (spark.createDataFrame([(json.dumps(cents),)], "c string")
+    (local_frame(spark, [(json.dumps(cents),)], "c string")
      .coalesce(1).write.mode("overwrite").text(f"{index_dir}/centroids"))
     return n_cells
 

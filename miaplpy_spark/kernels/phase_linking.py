@@ -40,10 +40,16 @@ F32 = np.float32
 
 def _cholesky_ok_batch(M: np.ndarray) -> np.ndarray:
     """(B, N, N) -> (B,) bool: per-matrix Cholesky success, via the
-    SAME LAPACK potrf np.linalg.cholesky runs (identical pass/fail
-    per matrix); failures are detected as NaN fill instead of a
-    batch-wide exception. Inputs are finite by construction (gap-fill
-    interpolates), so NaN in the factor <=> LAPACK info > 0."""
+    LAPACK potrf np.linalg.cholesky runs, but in the input's own
+    precision (np.linalg factors float32 in double, so a matrix
+    singular only to within float32 rounding fails here and passes
+    there); failures are detected as NaN fill instead of a batch-wide
+    exception. Inputs are finite by construction (gap-fill
+    interpolates), so NaN in the factor <=> LAPACK info > 0. Without
+    the raw gufuncs each matrix takes np.linalg.cholesky."""
+    if _ul is None:
+        return np.array([_or_none(np.linalg.cholesky, m) is not None
+                         for m in M], dtype=bool)
     with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
         L = _ul.cholesky_lo(M)
     return ~np.isnan(L).any(axis=(1, 2))
@@ -53,10 +59,29 @@ def inv_batch_status(A: np.ndarray):
     """Batched inverse with PER-MATRIX failure status: (inv, ok).
     Exactly-singular members (where np.linalg.inv would raise) come
     back NaN-filled with ok=False; everything else is bit-identical
-    to np.linalg.inv (same LAPACK getrf/getri per matrix)."""
+    to np.linalg.inv (same LAPACK getrf/getri per matrix). Without the
+    raw gufuncs each matrix takes np.linalg.inv."""
+    if _ul is None:
+        I = np.full(A.shape, np.nan, dtype=A.dtype)
+        ok = np.zeros(A.shape[0], dtype=bool)
+        for p, a in enumerate(A):
+            inv = _or_none(np.linalg.inv, a)
+            if inv is not None:
+                I[p], ok[p] = inv, True
+        return I, ok
     with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
         I = _ul.inv(A)
     return I, ~np.isnan(I).any(axis=(1, 2))
+
+
+def _or_none(fn, a):
+    """fn(a), or None where it raises LinAlgError — the per-matrix
+    fallback when the raw LAPACK gufuncs are unavailable."""
+    try:
+        return fn(a)
+    except np.linalg.LinAlgError:
+        return None
+
 
 # --------------------------------------------------------------------------
 # correlation estimation

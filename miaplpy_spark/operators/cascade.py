@@ -25,6 +25,7 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
+from ..session import local_frame
 from ..sources.catalog import TierStore
 from .checkpoint import CheckpointLog
 from .rollup import (attach_doc_dim, rollup_1d, rollup_1h,
@@ -430,8 +431,8 @@ def _read_watermark(spark: SparkSession, store: TierStore, tier: str) -> int:
 
 def _write_watermark(spark: SparkSession, store: TierStore, tier: str,
                      max_idx: int) -> None:
-    df = spark.createDataFrame(
-        [(tier, int(max_idx))], "tier string, max_idx long"
+    df = local_frame(
+        spark, [(tier, int(max_idx))], "tier string, max_idx long"
     ).withColumn("updated_at", F.current_timestamp())
     store.append(df, WATERMARK_TABLE)
 

@@ -17,19 +17,31 @@ long, rows_processed long, lineage string, updated_at timestamp.
 from __future__ import annotations
 
 import time
+from datetime import datetime, timedelta, timezone
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from ..sources.catalog import TierStore
 
 CHECKPOINT_TABLE = "checkpoints"
 
 _SCHEMA = ("tier string, partition_key int, snapshot_id long, "
            "rows_processed long, lineage string, updated_at timestamp")
+# appended rows always carry their stamp, so the column is written
+# required: a nullable frame cannot append to a table created with a
+# required column (Iceberg's write-time nullability check)
+_LOG_SCHEMA = _SCHEMA + " not null"
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 class CheckpointLog:
+    """Append-only completion log over the ``checkpoints`` table.
+    Completion rows and the empty frames of a fresh warehouse are built
+    with ``session.local_frame`` (an Arrow ``LocalTableScan``), so the
+    metadata path never starts a Python worker pool."""
+
     def __init__(self, store: TierStore):
         self.store = store
 
@@ -44,7 +56,7 @@ class CheckpointLog:
         new lineage supersedes old completions."""
         df = self._read(spark)
         if df is None:
-            return spark.createDataFrame([], "partition_key int")
+            return local_frame(spark, [], "partition_key int")
         w_latest = (
             df.where(F.col("tier") == tier)
             .groupBy("partition_key")
@@ -79,16 +91,12 @@ class CheckpointLog:
         if not bucket_counts:
             return
         snap = snapshot_id if snapshot_id is not None else time.time_ns()
-        now = time.time()
-        rows = [
-            Row(tier=tier, partition_key=int(b), snapshot_id=snap,
-                rows_processed=int(c), lineage=lineage,
-                updated_at=None)
-            for b, c in bucket_counts
-        ]
-        df = (spark.createDataFrame(rows, _SCHEMA)
-              .withColumn("updated_at", F.timestamp_seconds(F.lit(now))))
-        self.store.append(df, CHECKPOINT_TABLE)
+        # int() truncates to microseconds exactly as timestamp_seconds
+        now = _EPOCH + timedelta(microseconds=int(time.time() * 1_000_000))
+        rows = [(tier, int(b), snap, int(c), lineage, now)
+                for b, c in bucket_counts]
+        self.store.append(local_frame(spark, rows, _LOG_SCHEMA),
+                          CHECKPOINT_TABLE)
 
     def compact(self, spark: SparkSession) -> dict:
         """Rewrite the append-only checkpoint log to its LATEST row per
@@ -120,7 +128,7 @@ class CheckpointLog:
         'every partition emits lineage + rows-processed metrics')."""
         df = self._read(spark)
         if df is None:
-            return spark.createDataFrame([], _SCHEMA)
+            return local_frame(spark, [], _SCHEMA)
         return (df.groupBy("tier", "partition_key")
                   .agg(F.max_by("rows_processed", "updated_at").alias("rows_processed"),
                        F.max_by("lineage", "updated_at").alias("lineage"),

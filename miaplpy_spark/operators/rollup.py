@@ -248,10 +248,15 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
                 # almost always contain one such matrix. Now only the
                 # genuinely singular few take the scalar chain (the
                 # reference's fallback, lib/utils.pyx:538-551).
-                vec_ok, good = pl.emi_phase_batch_status(
-                    cohL[ok], abscoh[ok])
                 okidx = np.flatnonzero(ok)
-                vecL[okidx[good]] = vec_ok[good]
+                try:
+                    vec_ok, good = pl.emi_phase_batch_status(
+                        cohL[ok], abscoh[ok])
+                    vecL[okidx[good]] = vec_ok[good]
+                except np.linalg.LinAlgError:
+                    # eigh non-convergence raises for the whole stack,
+                    # naming no member: all of them take the chain
+                    good = np.zeros(okidx.size, dtype=bool)
                 for b in okidx[~good]:
                     try:
                         vecL[b] = pl.emi_phase(cohL[b], abscoh[b])

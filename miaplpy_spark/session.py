@@ -7,6 +7,11 @@ Tuning rationale (SURVEY.md §4):
 - Arrow enabled + bounded batch size: the rollup kernels are Arrow
   pandas UDFs; maxRecordsPerBatch bounds per-batch memory exactly like
   the reference's chunked aggregation (P5).
+- Driver-held rows (checkpoint logs, watermarks, union-find labels,
+  index parameters) enter as Arrow ``LocalTableScan`` relations via
+  ``local_frame``: a Python-list ``createDataFrame`` plans as ``Scan
+  ExistingRDD`` over a PythonRDD and boots a Python worker pool just
+  to move a handful of rows.
 - OMP_NUM_THREADS=1 in executor env: 1 BLAS thread x many tasks beats
   the opposite — the reference measured this (P9,
   dev/ifgram_inversion_L1L2.py:1432-1449). On a real cluster, set via
@@ -17,8 +22,9 @@ Tuning rationale (SURVEY.md §4):
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Must happen before worker NumPy imports; harmless if already set.
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
@@ -76,3 +82,30 @@ def _master_cores(master: str, default: int) -> int:
             except ValueError:
                 pass
     return default
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """DataFrame over driver-held ``rows`` (tuples in ``ddl`` column
+    order) as an Arrow ``LocalTableScan``: the rows travel to the JVM
+    as one Arrow stream and no Python worker ever starts. Values and
+    types equal ``spark.createDataFrame(rows, ddl)``; naive datetimes
+    are read as local wall time, the rule ``TimestampType`` applies."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, TimestampType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    arrays = [pa.array([_as_utc(v) for v in col]
+                       if isinstance(f.dataType, TimestampType) else col,
+                       type=a.type)
+              for f, a, col in zip(schema, arrow, cols)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
+                                 schema)
+
+
+def _as_utc(v):
+    if isinstance(v, datetime) and v.tzinfo is None:
+        return v.astimezone(timezone.utc)
+    return v

@@ -374,3 +374,31 @@ def test_est_cov_matches_direct(sim):
     np.testing.assert_allclose(one, batched[0], atol=1e-6)
     np.testing.assert_allclose(pl.cov2corr(one), pl.est_corr(Z[0]),
                                atol=1e-6)
+
+
+def test_batch_status_without_raw_gufuncs(monkeypatch):
+    """_cholesky_ok_batch / inv_batch_status degrade to per-matrix
+    np.linalg calls when numpy.linalg._umath_linalg is absent, with the
+    same status and the same values as the raw-gufunc path. The
+    Cholesky stack holds no matrix singular only to within float32
+    rounding: np.linalg factors float32 input in double precision, so
+    such a matrix passes the fallback probe and fails the raw one."""
+    rng = np.random.default_rng(5)
+    A = rng.normal(size=(5, 6, 6))
+    M = (A @ A.transpose(0, 2, 1) + 0.1 * np.eye(6)).astype(np.float32)
+    M[1] = 1.0                                  # rank 1: not PD
+    M[4] -= 10 * np.eye(6, dtype=np.float32)    # indefinite, invertible
+    D = M.astype(np.float64)
+    D[3, 2] = D[3, 1]                           # duplicate row:
+    D[3, :, 2] = D[3, :, 1]                     # exactly singular
+    ok_raw = pl._cholesky_ok_batch(M)
+    inv_raw, iok_raw = pl.inv_batch_status(D)
+    assert ok_raw.tolist() == [True, False, True, True, False]
+    assert iok_raw.tolist() == [True, False, True, False, True]
+
+    monkeypatch.setattr(pl, "_ul", None)
+    np.testing.assert_array_equal(pl._cholesky_ok_batch(M), ok_raw)
+    inv_fb, iok_fb = pl.inv_batch_status(D)
+    np.testing.assert_array_equal(iok_fb, iok_raw)
+    np.testing.assert_array_equal(inv_fb, inv_raw)   # NaN == NaN here
+    assert inv_fb.dtype == inv_raw.dtype

@@ -383,3 +383,37 @@ def test_string_free_core_path_matches(spark):
     np.testing.assert_array_equal(
         np.stack(full_1d["adjusted_phase"].to_numpy()),
         np.stack(core_1d["adjusted_phase"].to_numpy()))
+
+
+def test_emi_batch_linalg_error_takes_scalar_chain(monkeypatch):
+    """np.linalg.eigh inside emi_phase_batch_status can raise
+    LinAlgError (non-convergence) for the whole stack; the link batch
+    then routes every member through the scalar EMI -> EVD chain
+    instead of failing the Spark task."""
+    from miaplpy_spark.operators.rollup import _link_batch
+
+    rng = np.random.default_rng(11)
+    T, S = 8, 24
+    base = np.exp(1j * np.cumsum(rng.normal(0, 0.3, T)))[:, None]
+    Z = (base * (1 + 0.5 * (rng.normal(size=(4, T, S))
+                            + 1j * rng.normal(size=(4, T, S))))
+         ).astype(np.complex64)
+    want_vec, want_q, want_sq = _link_batch(Z, "EMI")
+
+    def eigh_fails(*a, **k):
+        raise np.linalg.LinAlgError("Eigenvalues did not converge")
+
+    scalar = []
+    emi_phase = pl.emi_phase
+
+    def counting_emi(coh, abscoh):
+        scalar.append(1)
+        return emi_phase(coh, abscoh)
+
+    monkeypatch.setattr(pl, "emi_phase_batch_status", eigh_fails)
+    monkeypatch.setattr(pl, "emi_phase", counting_emi)
+    vec, q, sq = _link_batch(Z, "EMI")
+    assert len(scalar) == Z.shape[0]
+    np.testing.assert_allclose(vec, want_vec, atol=1e-4)
+    np.testing.assert_allclose(q, want_q, atol=1e-4)
+    np.testing.assert_allclose(sq, want_sq, atol=1e-3)

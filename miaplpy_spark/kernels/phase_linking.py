@@ -274,6 +274,9 @@ def regularize_matrix_batch(M: np.ndarray, max_tries: int = 100):
     criterion and the 1e-6, 2e-6, 4e-6... cumulative loading sequence
     are identical to the scalar regularize_matrix), then each round
     loads only the still-failing subset and re-probes it batched.
+    The schedule is the scalar one too: ``max_tries`` probe-then-load
+    rounds, so a matrix failing the last probe keeps its last load,
+    unprobed, and gets status 1.
     Real batches routinely need 1-3 loads for MOST members, so the
     old one-collective-probe-then-scalar-loop shape degenerated to
     per-matrix Python calls for nearly every group (~40% of the 1h
@@ -287,21 +290,17 @@ def regularize_matrix_batch(M: np.ndarray, max_tries: int = 100):
         for b in range(B):
             status[b], out[b] = regularize_matrix(out[b], max_tries)
         return status, out
-    ok = _cholesky_ok_batch(out)
-    if ok.all():
-        return status, out
-    pend = np.flatnonzero(~ok)
-    N = M.shape[1]
-    diag = np.arange(N)
-    en = np.full(pend.shape[0], 1e-6, dtype=np.float64)
-    for _ in range(max_tries):
-        out[pend[:, None], diag[None, :], diag[None, :]] += \
-            en[:, None].astype(F32)
-        en *= 2
-        ok_p = _cholesky_ok_batch(out[pend])
+    pend = np.arange(B)
+    diag = np.arange(M.shape[1])
+    en = np.full(B, 1e-6, dtype=np.float64)
+    for probe in range(max_tries):
+        ok_p = _cholesky_ok_batch(out if probe == 0 else out[pend])
         pend, en = pend[~ok_p], en[~ok_p]
         if pend.size == 0:
             return status, out
+        out[pend[:, None], diag[None, :], diag[None, :]] += \
+            en[:, None].astype(F32)
+        en *= 2
     status[pend] = 1
     return status, out
 

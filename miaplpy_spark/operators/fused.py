@@ -1,15 +1,19 @@
 """Fused raw -> (1h + 1d) cascade: both tiers from ONE Arrow pass.
 
-The pipelined cascade ships every 1h row across the JVM<->Python
-boundary twice (out of the 1h kernel, into the 1d kernel). Measured in
-this sandbox, that worker-boundary transfer is the dominant
-non-scaling cost (BENCH/BASELINE.md). The fused kernel keeps the
-hourly intermediates as in-process NumPy and emits BOTH tiers through
-a single superset-schema stream with a ``tier`` discriminator column;
-callers split with two filters (after a persist, for dual writes).
+The tiered cascade ships every 1h row across the JVM<->Python boundary
+twice (out of the 1h kernel, into the 1d kernel). The fused kernel
+composes the same two window functions in one process instead:
+``hourly_windows`` builds the per-(doc, hour) windows, and
+``daily_windows`` derives the per-(doc, day) windows from those
+in-process hourly arrays (the shared sub-window of *Factor Windows*,
+ICDE'22). Both tiers leave through a single superset-schema stream with
+a ``tier`` discriminator column; callers split with two filters (after
+a persist, for dual writes).
 
-Carry is held at DAY boundaries (a (doc, day) block = up to 240 raw
-rows), so every emitted region contains only complete days.
+The carry is held at DAY boundaries (``stream_groups`` with a day
+window), so every ``process`` call sees complete days. Wide 128-bit
+doc keys (``EngineConfig.wide_doc_key``) group and carry on
+(doc_key, doc_key2) exactly like the tiered kernels.
 """
 
 from __future__ import annotations
@@ -22,19 +26,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..config import EngineConfig
-from ..kernels.gapfill import fill_dense_batch
 from .rollup import (
-    _Carry,
-    _concat,
-    _ensemble_phases,
     _extract,
-    _group_starts,
-    _link_batch,
-    _list_col,
     _pa_schema,
-    _shp_present,
-    _slice_tail,
-    _take_strs,
+    _record_batch,
+    _strings,
+    _widen_key,
+    daily_windows,
+    hourly_windows,
+    stream_groups,
+    with_doc_keys,
 )
 
 FUSED_SCHEMA = (
@@ -48,175 +49,31 @@ FUSED_SCHEMA = (
 
 
 def make_fused_kernel(cfg: EngineConfig, tok_col: str = "zphi"):
-    T, S, H = cfg.slots_per_hour, cfg.n_samples, cfg.hours_per_day
-    spd = cfg.slots_per_day
-    V = cfg.vocab_size
-    method, lag, ps_test = cfg.method, cfg.sbw_lag, cfg.ps_test
-    shp_filter, shp_test, shp_alpha = (cfg.shp_filter, cfg.shp_test,
-                                       cfg.shp_alpha)
-    out_schema = _pa_schema(FUSED_SCHEMA)
+    H, S, spd = cfg.hours_per_day, cfg.n_samples, cfg.slots_per_day
+    wide = getattr(cfg, "wide_doc_key", False)
+    out_schema = _pa_schema(_widen_key(FUSED_SCHEMA, wide))
     num_cols = ["doc_key", "slot", "bucket", "n_tok", "sum_tok",
-                "min_tok", "max_tok"]
+                "min_tok", "max_tok"] + (["doc_key2"] if wide else [])
     list_cols = {tok_col: (S, np.int16 if tok_col == "ztok" else np.float32)}
 
-    nulls = lambda typ, n: pa.nulls(n, _pa_type(typ))
-
-    def _pa_type(t):
-        return {"int": pa.int32(), "float": pa.float32(),
-                "double": pa.float64(),
-                "list": pa.list_(pa.float32())}[t]
-
-    def process(num: dict, lookup) -> Iterator[pa.RecordBatch]:
-        n = num["doc_key"].shape[0]
-        doc_key = num["doc_key"]
-        slot = num["slot"]
-        hour = slot // T
-        sih = slot % T
-
-        # ---- stage A: hourly windows (identical math to rollup_1h) --
-        starts = _group_starts(doc_key, hour)
-        G = starts.shape[0]
-        gid = np.cumsum(np.concatenate(
-            [[True], (doc_key[1:] != doc_key[:-1]) | (hour[1:] != hour[:-1])])) - 1
-        phi = _ensemble_phases(num, V)
-        z = np.empty(phi.shape, dtype=np.complex64)
-        np.cos(phi, out=z.real)
-        np.sin(phi, out=z.imag)
-        dense = np.zeros((G, T, S), dtype=np.complex64)
-        present = np.zeros((G, T), dtype=bool)
-        dense[gid, sih] = z
-        present[gid, sih] = True
-        # SHP membership gate — identical to the tiered rollup_1h path
-        # (the fused cascade previously ignored cfg.shp_filter, so the
-        # two execution shapes produced different ensembles)
-        ens_present = present
-        if shp_filter:
-            phi_dense = np.zeros((G, T, S), dtype=np.float32)
-            phi_dense[gid, sih] = phi
-            ens_present = _shp_present(phi_dense, present, shp_test,
-                                       shp_alpha)
-        Z = np.empty(dense.shape, dtype=np.complex64)
-        Z.real = fill_dense_batch(dense.real, ens_present)
-        Z.imag = fill_dense_batch(dense.imag, ens_present)
-        vec, quality, squeezed = _link_batch(Z, method, lag, ps_test=ps_test)
-
-        ends = np.append(starts[1:], n)
-        n_obs = (ends - starts).astype(np.int32)
-        sum_tok = np.add.reduceat(num["sum_tok"], starts)
-        min_tok = np.minimum.reduceat(num["min_tok"], starts)
-        max_tok = np.maximum.reduceat(num["max_tok"], starts)
-        mean_ntok = np.add.reduceat(num["n_tok"].astype(np.float64), starts) / n_obs
-        hour_g = hour[starts].astype(np.int32)
-        doc_key_g = doc_key[starts]
-        bucket_g = num["bucket"][starts].astype(np.int32)
-        lp = np.angle(vec).astype(np.float32)
-        n_filled = (T - n_obs).astype(np.int32)
-        doc_id_g = _take_strs(lookup, starts, "doc_id")
-        source_g = _take_strs(lookup, starts, "source")
-
-        yield pa.RecordBatch.from_arrays([
-            pa.array(["1h"] * G, pa.string()),
-            pa.array(doc_id_g, pa.string()),
-            pa.array(doc_key_g, pa.int64()),
-            pa.array(source_g, pa.string()),
-            pa.array(bucket_g),
-            pa.array(hour_g),
-            pa.array((hour_g // H).astype(np.int32)),
-            pa.array(n_obs),
-            pa.array(n_filled),
-            pa.array(sum_tok.astype(np.int64)),
-            pa.array(min_tok.astype(np.int32)),
-            pa.array(max_tok.astype(np.int32)),
-            pa.array(mean_ntok),
-            _list_col(lp),
-            _list_col(np.concatenate([squeezed.real, squeezed.imag],
-                                     axis=1).astype(np.float32)),
-            pa.array(quality.astype(np.float32)),
-            nulls("int", G), nulls("double", G), nulls("float", G),
-            nulls("list", G), nulls("list", G),
-        ], schema=out_schema)
-
-        # ---- stage B: daily tier from the in-process hourly arrays --
-        day_h = hour_g // H
-        hid = hour_g % H
-        starts_d = _group_starts(doc_key_g, day_h)
-        Gd = starts_d.shape[0]
-        gid_d = np.cumsum(np.concatenate(
-            [[True], (doc_key_g[1:] != doc_key_g[:-1])
-             | (day_h[1:] != day_h[:-1])])) - 1
-        dsq = np.zeros((Gd, H, S), dtype=np.complex64)
-        dpres = np.zeros((Gd, H), dtype=bool)
-        dsq[gid_d, hid] = squeezed
-        dpres[gid_d, hid] = True
-        SQ = np.empty(dsq.shape, dtype=np.complex64)
-        SQ.real = fill_dense_batch(dsq.real, dpres)
-        SQ.imag = fill_dense_batch(dsq.imag, dpres)
-        vec_d, quality_1d, day_squeezed = _link_batch(SQ, method)
-        datum = np.angle(vec_d).astype(np.float32)
-        lp_dense = np.zeros((Gd, H, T), dtype=np.float32)
-        lp_dense[gid_d, hid] = lp
-        adj = np.angle(np.exp(1j * (lp_dense + datum[:, :, None]))) \
-            .astype(np.float32).reshape(Gd, H * T)
-
-        ends_d = np.append(starts_d[1:], G)
-        n_hours = (ends_d - starts_d).astype(np.int32)
-        n_obs_d = np.add.reduceat(n_obs, starts_d).astype(np.int32)
-        n_filled_d = np.add.reduceat(n_filled, starts_d).astype(np.int32)
-        sum_tok_d = np.add.reduceat(sum_tok, starts_d)
-        min_tok_d = np.minimum.reduceat(min_tok, starts_d)
-        max_tok_d = np.maximum.reduceat(max_tok, starts_d)
-        w_mean = (np.add.reduceat(mean_ntok * n_obs, starts_d)
-                  / np.maximum(n_obs_d, 1))
-        mean_q = (np.add.reduceat(quality.astype(np.float64), starts_d)
-                  / n_hours)
-
-        yield pa.RecordBatch.from_arrays([
-            pa.array(["1d"] * Gd, pa.string()),
-            pa.array([doc_id_g[i] for i in starts_d], pa.string()),
-            pa.array(doc_key_g[starts_d], pa.int64()),
-            pa.array([source_g[i] for i in starts_d], pa.string()),
-            pa.array(bucket_g[starts_d]),
-            nulls("int", Gd),
-            pa.array(day_h[starts_d].astype(np.int32)),
-            pa.array(n_obs_d),
-            pa.array(n_filled_d),
-            pa.array(sum_tok_d.astype(np.int64)),
-            pa.array(min_tok_d.astype(np.int32)),
-            pa.array(max_tok_d.astype(np.int32)),
-            pa.array(w_mean),
-            nulls("list", Gd),
-            _list_col(np.concatenate([day_squeezed.real, day_squeezed.imag],
-                                     axis=1).astype(np.float32)),
-            nulls("float", Gd),
-            pa.array(n_hours),
-            pa.array(mean_q),
-            pa.array(quality_1d.astype(np.float32)),
-            _list_col(datum),
-            _list_col(adj),
-        ], schema=out_schema)
+    def process(num: dict, lookup) -> tuple[pa.RecordBatch, pa.RecordBatch]:
+        h = hourly_windows(num, cfg)
+        d = daily_windows(h, cfg)
+        G, Gd = h["starts"].shape[0], d["starts"].shape[0]
+        return (
+            _record_batch(out_schema, {
+                **h, **_strings(lookup, h["starts"]), "tier": ["1h"] * G,
+                "day_idx": h["hour_idx"] // H}, G),
+            _record_batch(out_schema, {
+                **d, **_strings(lookup, h["starts"][d["starts"]]),
+                "tier": ["1d"] * Gd}, Gd),
+        )
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, list_cols)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            doc_key = num["doc_key"]
-            day = num["slot"] // spd
-            starts = _group_starts(doc_key, day)
-            last = starts[-1]
-            n = doc_key.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            yield from process({k: v[:last] for k, v in num.items()}, lookup)
-        if carry is not None:
-            num = carry.num
-            lookup = [(len(next(iter(num.values()))), carry.strs)]
-            yield from process(num, lookup)
+        for tiers in stream_groups(
+                batches, lambda b: _extract(b, num_cols, list_cols),
+                lambda num: num["slot"] // spd, process):
+            yield from tiers
 
     return kernel
 
@@ -227,22 +84,16 @@ def rollup_cascade_fused(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     ``fused.filter("tier = '1h'")`` / ``filter("tier = '1d'")`` (persist
     first when writing both)."""
     p = num_partitions or cfg.n_buckets
-    if getattr(cfg, "wide_doc_key", False):
-        # the fused single-pass variant is the measured-slower
-        # experiment (BENCH r3: 997k vs 1.05M pts/s) kept for study;
-        # 128-bit keys are wired through the default tiered path +
-        # inversion only. Fail loudly rather than silently grouping
-        # on the narrow key.
-        raise ValueError("wide_doc_key is not supported by the fused "
-                         "cascade; use the default tiered path")
-    if "doc_key" not in obs.columns:
-        obs = obs.withColumn("doc_key", F.xxhash64("doc_id"))
+    wide = getattr(cfg, "wide_doc_key", False)
+    obs = with_doc_keys(obs, cfg)
     tok_col = "ztok" if "ztok" in obs.columns else "zphi"
-    obs = obs.select("doc_id", "source", "doc_key", "slot", "bucket",
+    key_cols = ["doc_key"] + (["doc_key2"] if wide else [])
+    obs = obs.select("doc_id", "source", *key_cols, "slot", "bucket",
                      "n_tok", "sum_tok", "min_tok", "max_tok", tok_col)
     out = (obs.repartition(p, "bucket")
-              .sortWithinPartitions("doc_key", "slot")
-              .mapInArrow(make_fused_kernel(cfg, tok_col), FUSED_SCHEMA))
+              .sortWithinPartitions(*key_cols, "slot")
+              .mapInArrow(make_fused_kernel(cfg, tok_col),
+                          _widen_key(FUSED_SCHEMA, wide)))
     return out.withColumn(
         "hour_ts",
         F.when(F.col("tier") == "1h", F.timestamp_seconds(

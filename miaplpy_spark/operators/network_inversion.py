@@ -30,7 +30,8 @@ from ..kernels.lstsq import (
     invert_l1_batch,
     network_temporal_coherence,
 )
-from .rollup import _concat, _extract, _group_starts, _pa_schema, _slice_tail, _take_strs
+from .rollup import (_extract, _group_starts, _pa_schema, _strings,
+                     stream_groups, with_doc_keys)
 
 INVERSION_SCHEMA = (
     "doc_id string, source string, bucket int, n_hours int, "
@@ -73,7 +74,6 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     q_col = (F.col("quality") if "quality" in df_1h.columns
              else F.lit(1.0))  # unweighted when the tier carries no quality
     wide = getattr(cfg, "wide_doc_key", False)
-    from .rollup import with_doc_keys
     keyed = with_doc_keys(df_1h, cfg)
     key_cols = ["doc_key"] + (["doc_key2"] if wide else [])
     # the OUTPUT bucket is re-derived doc-pure (hash of doc_id, the
@@ -145,9 +145,10 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
         flat = np.concatenate([m.reshape(-1) for m in out_ts])
         flat_h = np.concatenate([m.reshape(-1) for m in out_h])
         g_starts = starts[gsel]
+        strs = _strings(lookup, g_starts)
         arrays = [
-            pa.array(_take_strs(lookup, g_starts, "doc_id"), pa.string()),
-            pa.array(_take_strs(lookup, g_starts, "source"), pa.string()),
+            pa.array(strs["doc_id"], pa.string()),
+            pa.array(strs["source"], pa.string()),
             pa.array(num["bucket"][g_starts].astype(np.int32)),
             pa.array(n_hours),
             pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat_h)),
@@ -157,37 +158,14 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
         return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # batch-carry protocol (same as the rollup kernels): input is
-        # shuffle-sorted by (doc_key, hour_idx), so only the trailing
-        # — possibly incomplete — doc group is held between Arrow
-        # batches. Per-worker memory is O(one Arrow batch + one doc
-        # series), NOT O(partition): with few buckets and many docs
-        # the old accumulate-the-partition shape was the one kernel
-        # that could OOM a worker at 100x scale.
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, {}, True)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            dk = num["doc_key"]
-            starts = _group_starts(dk, dk, num.get("doc_key2"))
-            last = starts[-1]
-            n = dk.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            out = process({k: v[:last] for k, v in num.items()}, lookup)
-            if out is not None:
-                yield out
-        if carry is not None:
-            num = carry.num
-            lookup = [(len(next(iter(num.values()))), carry.strs)]
-            out = process(num, lookup)
-            if out is not None:
-                yield out
+        # input is shuffle-sorted by (doc_key, hour_idx), so the carry
+        # holds only the trailing — possibly incomplete — doc between
+        # Arrow batches: per-worker memory is O(one Arrow batch + one
+        # doc series), NOT O(partition) (the accumulate-the-partition
+        # shape could OOM a worker at 100x scale with few buckets)
+        return stream_groups(batches,
+                             lambda b: _extract(b, num_cols, {}, True),
+                             lambda num: num["doc_key"], process)
 
     # partition by doc_key (not bucket): the inversion groups WHOLE
     # docs, and under salt_by_day a doc's hourly rows span buckets.

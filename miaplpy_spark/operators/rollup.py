@@ -24,9 +24,20 @@ Three deliberate choices, each measured in this sandbox:
    odds at sandbox scale ~1e-11; a 10^12-doc deployment sets
    ``EngineConfig.wide_doc_key`` to group/sort/join on a 128-bit
    (doc_key, doc_key2) pair — two xxhash64 salts, wired through both
-   tier kernels, attach_doc_dim, and the inversion
+   tier kernels, the fused cascade, attach_doc_dim, and the inversion
    (tests/test_wide_doc_key.py proves narrow-equality and planted-
    collision separation).
+
+One window-kernel core serves every grouped kernel. ``stream_groups``
+owns the batch-carry protocol: it holds the trailing, possibly
+incomplete (doc, window) group of each Arrow batch and puts it in front
+of the next, so each kernel hands it only a boundary (hour for 1h, day
+for 1d and fused, doc for the inversion) and a ``process`` body.
+``hourly_windows`` (raw rows -> per-(doc, hour) windows) and
+``daily_windows`` (hourly windows -> per-(doc, day) windows) are the
+pure-NumPy window math: the tiered kernels call one each, and the fused
+kernel (operators/fused.py) derives its days from its in-process hours
+with the same two calls.
 
 Window semantics: each 1h window (= 10 raw slots = one mini-stack,
 defaults/miaplpyApp_auto.cfg:19) is phase-linked independently and
@@ -51,6 +62,7 @@ shuffle (measured ~1.7x cheaper).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -283,20 +295,6 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
     return vec, quality, squeezed.astype(np.complex64)
 
 
-class _Carry:
-    """Holds the (possibly incomplete) trailing group between Arrow
-    batches of one partition. Numeric columns are numpy; the tiny
-    per-row string columns (doc_id, source) are Python lists —
-    strings are only ever materialized for group-start rows and
-    carried rows, never for the bulk."""
-
-    __slots__ = ("num", "strs")
-
-    def __init__(self, num: dict, strs: dict):
-        self.num = num
-        self.strs = strs
-
-
 def _extract(batch: pa.RecordBatch, num_cols: list[str],
              list_cols: dict[str, tuple], with_strings: bool = True
              ) -> tuple[dict, dict | None]:
@@ -312,21 +310,20 @@ def _extract(batch: pa.RecordBatch, num_cols: list[str],
     return num, strs
 
 
-def _concat(carry: _Carry | None, num: dict, strs: dict | None
+def _concat(carry: tuple | None, num: dict, strs: dict | None
             ) -> tuple[dict, list | None]:
-    """Merge carried rows in front of the current batch. Returns the
+    """Put carried rows in front of the current batch. Returns the
     merged numeric dict and a string lookup: an ordered list of
     (segment_length, strs_dict) used to materialize doc_id/source at
     arbitrary indices (carry segments hold Python lists, batch
     segments hold Arrow arrays). Lookup is None in string-free mode."""
     n = len(next(iter(num.values())))
+    lookup = None if strs is None else [(n, strs)]
     if carry is None:
-        return num, None if strs is None else [(n, strs)]
-    merged = {k: np.concatenate([carry.num[k], num[k]]) for k in num}
-    if strs is None:
-        return merged, None
-    carry_n = len(next(iter(carry.num.values())))
-    return merged, [(carry_n, carry.strs), (n, strs)]
+        return num, lookup
+    carry_num, carry_lookup = carry
+    merged = {k: np.concatenate([carry_num[k], num[k]]) for k in num}
+    return merged, None if lookup is None else carry_lookup + lookup
 
 
 def _take_strs(lookup, idx: np.ndarray, col: str) -> list:
@@ -343,13 +340,66 @@ def _take_strs(lookup, idx: np.ndarray, col: str) -> list:
     return out
 
 
-def _slice_tail(num: dict, lookup, start: int, n: int) -> _Carry:
-    tail_num = {k: v[start:] for k, v in num.items()}
+def _strings(lookup, idx: np.ndarray) -> dict:
+    """doc_id/source at ``idx`` as Python lists ({} when string-free).
+    Strings are only ever materialized for group-start rows and carried
+    rows, never for the bulk."""
     if lookup is None:
-        return _Carry(tail_num, None)
-    idx = np.arange(start, n)
-    tail_strs = {c: _take_strs(lookup, idx, c) for c in ("doc_id", "source")}
-    return _Carry(tail_num, tail_strs)
+        return {}
+    return {c: _take_strs(lookup, idx, c) for c in ("doc_id", "source")}
+
+
+def stream_groups(batches, extract, boundary, process) -> Iterator:
+    """The batch-carry protocol every grouped kernel streams through.
+
+    Rows arrive sorted by (doc_key[, doc_key2], window), so a group can
+    span Arrow batches: the trailing, possibly incomplete group of each
+    batch is held back and put in front of the next one, and the carry
+    is flushed at the end. Every ``process`` call therefore sees
+    complete groups only, and per-worker memory is O(one Arrow batch +
+    one group), never O(partition).
+
+    ``extract(batch) -> (num, strs)`` reads the numeric columns and the
+    Arrow string columns (None when string-free); ``boundary(num)`` is
+    the per-row window id (hour, day, or the doc key itself);
+    ``process(num, lookup)`` returns one output, and None is dropped."""
+    carry = None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        num, lookup = _concat(carry, *extract(batch))
+        n = num["doc_key"].shape[0]
+        last = _group_starts(num["doc_key"], boundary(num),
+                             num.get("doc_key2"))[-1]
+        tail = {k: v[last:] for k, v in num.items()}
+        carry = (tail, None if lookup is None else
+                 [(n - last, _strings(lookup, np.arange(last, n)))])
+        if last == 0:
+            continue
+        out = process({k: v[:last] for k, v in num.items()}, lookup)
+        if out is not None:
+            yield out
+    if carry is not None:
+        out = process(*carry)
+        if out is not None:
+            yield out
+
+
+def _record_batch(schema: pa.Schema, cols: dict, n: int) -> pa.RecordBatch:
+    """One output batch of ``n`` rows: each schema field from ``cols``
+    (a NumPy vector already in the field's dtype, a (n, k) float32
+    matrix for list fields, or a Python string list); fields missing
+    from ``cols`` are all-null."""
+    arrays = []
+    for f in schema:
+        v = cols.get(f.name)
+        if v is None:
+            arrays.append(pa.nulls(n, f.type))
+        elif pa.types.is_list(f.type):
+            arrays.append(_list_col(v))
+        else:
+            arrays.append(pa.array(v, f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def _acc_bucket_counts(acc, buckets: np.ndarray) -> None:
@@ -397,137 +447,200 @@ def _shp_present(phi_dense: np.ndarray, present: np.ndarray,
 # column's width is nearly free (8-col ingress 5.4 s vs 3-col-with-
 # list 3.3 s, measured with a count-only kernel) — so five scalar
 # columns ride one list. Values are exact in the lane type (int64 at
-# 1h; float64 at 1d, where every packed int is far below 2^53 and
-# float32 round-trips exactly), so kernels unpack bit-identical
-# arrays and outputs are unchanged.
-_ZSTAT_1H = ("bucket", "n_tok", "sum_tok", "min_tok", "max_tok")
-_ZSTAT_1D = ("bucket", "n_obs", "n_filled", "sum_tok", "min_tok",
-             "max_tok", "mean_ntok", "quality")
+# 1h; float64 at 1d, exact for every integer below 2^53 and for every
+# float32), so kernels unpack bit-identical arrays and outputs are
+# unchanged; unpacking a double lane checks the 2^53 bound.
+class _Lanes(NamedTuple):
+    type: str            # Spark lane type: "long" or "double"
+    names: tuple
 
 
-def _pack_zstat(names) -> F.Column:
-    lane_t = "long" if names is _ZSTAT_1H else "double"
-    return F.array(*[F.col(c).cast(lane_t) for c in names]).alias("zstat")
+_ZSTAT_1H = _Lanes("long", ("bucket", "n_tok", "sum_tok", "min_tok",
+                            "max_tok"))
+_ZSTAT_1D = _Lanes("double", ("bucket", "n_obs", "n_filled", "sum_tok",
+                              "min_tok", "max_tok", "mean_ntok",
+                              "quality"))
 
 
-def _unpack_zstat(num: dict, names) -> None:
+def _pack_zstat(lanes: _Lanes) -> F.Column:
+    return F.array(*[F.col(c).cast(lanes.type)
+                     for c in lanes.names]).alias("zstat")
+
+
+def _unpack_zstat(num: dict, lanes: _Lanes) -> None:
     zs = num.pop("zstat")
-    for i, name in enumerate(names):
+    # the long -> double cast rounds monotonically, so a packed integer
+    # lost precision exactly when its lane value is >= 2^53
+    if lanes.type == "double" and (np.abs(zs) >= 2.0 ** 53).any():
+        raise ValueError("zstat double lane holds a value >= 2^53; "
+                         "packed integer stats would lose precision")
+    for i, name in enumerate(lanes.names):
         num[name] = zs[:, i]
+
+
+def _fill_complex(dense: np.ndarray, present: np.ndarray) -> np.ndarray:
+    """Gap-fill a complex64 (G, W, K) window stack. float32 fill +
+    preallocated complex64 assembly: the f64 round-trip and the
+    complex128 intermediate of (re + 1j*im) were ~25% of the fill cost
+    at zero accuracy benefit (interp weights stay f64 inside
+    fill_dense_batch)."""
+    out = np.empty(dense.shape, dtype=np.complex64)
+    out.real = fill_dense_batch(dense.real, present)
+    out.imag = fill_dense_batch(dense.imag, present)
+    return out
+
+
+def hourly_windows(num: dict, cfg: EngineConfig) -> dict:
+    """Raw rows sorted by (doc_key[, doc_key2], slot) -> per-(doc, hour)
+    windows: phasor build, SHP gate, gap-fill and ``_link_batch`` over
+    every window of the batch at once, plus the token stats.
+
+    Returns the 1h-tier columns keyed by their ROLLUP_1H_SCHEMA names,
+    in their output dtypes (``squeezed`` packed re‖im float32), and
+    ``starts``: each window's first input row."""
+    T, S = cfg.slots_per_hour, cfg.n_samples
+    doc_key, slot = num["doc_key"], num["slot"]
+    n = doc_key.shape[0]
+    hour = slot // T
+    sih = slot % T
+    chg = _group_change(doc_key, hour, num.get("doc_key2"))
+    starts = np.flatnonzero(chg)
+    G = starts.shape[0]
+    gid = np.cumsum(chg) - 1
+
+    # reconstitute unit phasors from the compact transport — float32
+    # cos/sin into a preallocated complex64 (np.exp(1j*x) would
+    # silently run in complex128)
+    phi = _ensemble_phases(num, cfg.vocab_size)
+    z = np.empty(phi.shape, dtype=np.complex64)
+    np.cos(phi, out=z.real)
+    np.sin(phi, out=z.imag)
+
+    dense = np.zeros((G, T, S), dtype=np.complex64)
+    present = np.zeros((G, T), dtype=bool)
+    dense[gid, sih] = z
+    present[gid, sih] = True
+    ens_present = present
+    if cfg.shp_filter:
+        phi_dense = np.zeros((G, T, S), dtype=np.float32)
+        phi_dense[gid, sih] = phi
+        ens_present = _shp_present(phi_dense, present, cfg.shp_test,
+                                   cfg.shp_alpha)
+    vec, quality, squeezed = _link_batch(
+        _fill_complex(dense, ens_present), cfg.method, cfg.sbw_lag,
+        ps_test=cfg.ps_test)
+
+    n_obs = (np.append(starts[1:], n) - starts).astype(np.int32)
+    out = {
+        "starts": starts,
+        "doc_key": doc_key[starts],
+        "bucket": num["bucket"][starts].astype(np.int32),
+        "hour_idx": hour[starts].astype(np.int32),
+        "n_obs": n_obs,
+        "n_filled": (T - n_obs).astype(np.int32),
+        "sum_tok": np.add.reduceat(num["sum_tok"], starts).astype(np.int64),
+        "min_tok": np.minimum.reduceat(num["min_tok"], starts).astype(np.int32),
+        "max_tok": np.maximum.reduceat(num["max_tok"], starts).astype(np.int32),
+        "mean_ntok": (np.add.reduceat(num["n_tok"].astype(np.float64), starts)
+                      / n_obs),
+        "linked_phase": np.angle(vec).astype(np.float32),
+        "squeezed": np.concatenate([squeezed.real, squeezed.imag], axis=1),
+        "quality": quality.astype(np.float32),
+    }
+    if "doc_key2" in num:
+        out["doc_key2"] = num["doc_key2"][starts]
+    return out
+
+
+def daily_windows(hourly: dict, cfg: EngineConfig) -> dict:
+    """Hourly windows sorted by (doc_key[, doc_key2], hour_idx) ->
+    per-(doc, day) windows: the datum pass re-links the day's squeezed
+    carries (datum_connect A11), the hourly linked phases are shifted by
+    the datum, and the stats combine over each day's hours.
+
+    ``hourly`` holds the 1h-tier columns by name — the tier's Arrow
+    input (zstat stats as float64 lanes) or ``hourly_windows`` output
+    (integer stats); both give the same values. Returns the 1d-tier
+    columns keyed by their ROLLUP_1D_SCHEMA names, in their output
+    dtypes, and ``starts``: each day's first hourly row."""
+    H, S, T = cfg.hours_per_day, cfg.n_samples, cfg.slots_per_hour
+    doc_key, hour_idx = hourly["doc_key"], hourly["hour_idx"]
+    n = doc_key.shape[0]
+    day = hour_idx // H
+    hid = hour_idx % H
+    chg = _group_change(doc_key, day, hourly.get("doc_key2"))
+    starts = np.flatnonzero(chg)
+    G = starts.shape[0]
+    gid = np.cumsum(chg) - 1
+
+    sq_in = hourly["squeezed"]
+    dense = np.zeros((G, H, S), dtype=np.complex64)
+    present = np.zeros((G, H), dtype=bool)
+    dense[gid, hid] = sq_in[:, :S] + 1j * sq_in[:, S:]
+    present[gid, hid] = True
+
+    # datum pass: re-link the squeezed carries (datum_connect A11)
+    vec, quality_1d, day_squeezed = _link_batch(
+        _fill_complex(dense, present), cfg.method)
+    datum = np.angle(vec).astype(np.float32)  # (G, H)
+
+    lp_dense = np.zeros((G, H, T), dtype=np.float32)
+    lp_dense[gid, hid] = hourly["linked_phase"]
+    adj = np.angle(np.exp(1j * (lp_dense + datum[:, :, None]))).astype(np.float32)
+
+    n_hours = (np.append(starts[1:], n) - starts).astype(np.int32)
+    n_obs = np.add.reduceat(hourly["n_obs"], starts).astype(np.int32)
+    out = {
+        "starts": starts,
+        "doc_key": doc_key[starts],
+        "bucket": hourly["bucket"][starts].astype(np.int32),
+        "day_idx": day[starts].astype(np.int32),
+        "n_hours": n_hours,
+        "n_obs": n_obs,
+        "n_filled": np.add.reduceat(hourly["n_filled"], starts).astype(np.int32),
+        "sum_tok": np.add.reduceat(hourly["sum_tok"], starts).astype(np.int64),
+        "min_tok": np.minimum.reduceat(hourly["min_tok"], starts).astype(np.int32),
+        "max_tok": np.maximum.reduceat(hourly["max_tok"], starts).astype(np.int32),
+        "mean_ntok": (np.add.reduceat(hourly["mean_ntok"] * hourly["n_obs"],
+                                      starts) / np.maximum(n_obs, 1)),
+        "mean_quality_1h": (np.add.reduceat(
+            hourly["quality"].astype(np.float64), starts) / n_hours),
+        "quality_1d": quality_1d.astype(np.float32),
+        "datum_shift": datum,
+        "adjusted_phase": adj.reshape(G, H * T),
+        "squeezed": np.concatenate([day_squeezed.real, day_squeezed.imag],
+                                   axis=1),
+    }
+    if "doc_key2" in hourly:
+        out["doc_key2"] = hourly["doc_key2"][starts]
+    return out
 
 
 def make_rollup_1h_kernel(cfg: EngineConfig, counts_acc=None,
                           tok_col: str = "zphi", with_strings: bool = True):
-    T, S, V = cfg.slots_per_hour, cfg.n_samples, cfg.vocab_size
-    method, lag, ps_test = cfg.method, cfg.sbw_lag, cfg.ps_test
-    shp_filter, shp_test, shp_alpha = (cfg.shp_filter, cfg.shp_test,
-                                       cfg.shp_alpha)
+    T, S = cfg.slots_per_hour, cfg.n_samples
     wide = getattr(cfg, "wide_doc_key", False)
     out_schema = _pa_schema(_widen_key(
         ROLLUP_1H_SCHEMA if with_strings else ROLLUP_1H_CORE_SCHEMA, wide))
     num_cols = ["doc_key", "slot"] + (["doc_key2"] if wide else [])
     list_cols = {tok_col: (S, np.int16 if tok_col == "ztok" else np.float32),
-                 "zstat": (len(_ZSTAT_1H), np.int64)}
+                 "zstat": (len(_ZSTAT_1H.names), np.int64)}
+
+    def extract(batch):
+        num, strs = _extract(batch, num_cols, list_cols, with_strings)
+        _unpack_zstat(num, _ZSTAT_1H)
+        return num, strs
 
     def process(num: dict, lookup) -> pa.RecordBatch:
-        n = num["doc_key"].shape[0]
-        doc_key = num["doc_key"]
-        slot = num["slot"]
-        hour = slot // T
-        sih = slot % T
-        key2 = num.get("doc_key2")
-        chg = _group_change(doc_key, hour, key2)
-        starts = np.flatnonzero(chg)
-        G = starts.shape[0]
-        gid = np.cumsum(chg) - 1
-
-        # reconstitute unit phasors from the compact transport —
-        # float32 cos/sin into a preallocated complex64 (np.exp(1j*x)
-        # would silently run in complex128)
-        phi = _ensemble_phases(num, V)
-        z = np.empty(phi.shape, dtype=np.complex64)
-        np.cos(phi, out=z.real)
-        np.sin(phi, out=z.imag)
-
-        dense = np.zeros((G, T, S), dtype=np.complex64)
-        present = np.zeros((G, T), dtype=bool)
-        dense[gid, sih] = z
-        present[gid, sih] = True
-        ens_present = present
-        if shp_filter:
-            phi_dense = np.zeros((G, T, S), dtype=np.float32)
-            phi_dense[gid, sih] = phi
-            ens_present = _shp_present(phi_dense, present, shp_test,
-                                       shp_alpha)
-        # float32 fill + preallocated complex64 assembly: the f64
-        # round-trip and the complex128 intermediate of (re + 1j*im)
-        # were ~25% of the fill cost at zero accuracy benefit (interp
-        # weights stay f64 inside fill_dense_batch)
-        Z = np.empty(dense.shape, dtype=np.complex64)
-        Z.real = fill_dense_batch(dense.real, ens_present)
-        Z.imag = fill_dense_batch(dense.imag, ens_present)
-
-        vec, quality, squeezed = _link_batch(Z, method, lag, ps_test=ps_test)
-
-        ends = np.append(starts[1:], n)
-        n_obs = (ends - starts).astype(np.int32)
-        sum_tok = np.add.reduceat(num["sum_tok"], starts)
-        min_tok = np.minimum.reduceat(num["min_tok"], starts)
-        max_tok = np.maximum.reduceat(num["max_tok"], starts)
-        mean_ntok = np.add.reduceat(num["n_tok"].astype(np.float64), starts) / n_obs
-
-        sq_packed = np.concatenate([squeezed.real, squeezed.imag], axis=1)
-        _acc_bucket_counts(counts_acc, num["bucket"][starts])
-        arrays = []
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "doc_id"),
-                                   pa.string()))
-        arrays.append(pa.array(doc_key[starts], pa.int64()))
-        if wide:
-            arrays.append(pa.array(key2[starts], pa.int64()))
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "source"),
-                                   pa.string()))
-        arrays += [
-            pa.array(num["bucket"][starts].astype(np.int32)),
-            pa.array(hour[starts].astype(np.int32)),
-            pa.array(n_obs),
-            pa.array((T - n_obs).astype(np.int32)),
-            pa.array(sum_tok.astype(np.int64)),
-            pa.array(min_tok.astype(np.int32)),
-            pa.array(max_tok.astype(np.int32)),
-            pa.array(mean_ntok),
-            _list_col(np.angle(vec).astype(np.float32)),
-            _list_col(sq_packed.astype(np.float32)),
-            pa.array(quality.astype(np.float32)),
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+        h = hourly_windows(num, cfg)
+        _acc_bucket_counts(counts_acc, h["bucket"])
+        return _record_batch(out_schema,
+                             {**h, **_strings(lookup, h["starts"])},
+                             h["starts"].shape[0])
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, list_cols, with_strings)
-            _unpack_zstat(num, _ZSTAT_1H)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            doc_key = num["doc_key"]
-            hour = num["slot"] // T
-            starts = _group_starts(doc_key, hour, num.get("doc_key2"))
-            last = starts[-1]
-            n = doc_key.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            num_head = {k: v[:last] for k, v in num.items()}
-            yield process(num_head, lookup)
-        if carry is not None:
-            num = carry.num
-            lookup = (None if carry.strs is None else
-                      [(len(next(iter(num.values()))), carry.strs)])
-            yield process(num, lookup)
+        return stream_groups(batches, extract, lambda num: num["slot"] // T,
+                             process)
 
     return kernel
 
@@ -548,8 +661,7 @@ def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame,
             and "doc_key2" not in doc_dim.columns):
         # a narrow dim under a wide tier would quietly degrade the
         # join to doc_key alone — the collision fan-out wide mode
-        # exists to prevent. Fail loudly (fused.py does the same for
-        # its unsupported combination); widen the dim with
+        # exists to prevent. Fail loudly; widen the dim with
         # with_doc_keys(dim, cfg) instead.
         raise ValueError("tier output is wide (doc_key2) but doc_dim "
                          "is narrow; build the dimension with "
@@ -617,114 +729,29 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
 def make_rollup_1d_kernel(cfg: EngineConfig, counts_acc=None,
                           with_strings: bool = True):
     H, S, T = cfg.hours_per_day, cfg.n_samples, cfg.slots_per_hour
-    method = cfg.method
     wide = getattr(cfg, "wide_doc_key", False)
     out_schema = _pa_schema(_widen_key(
         ROLLUP_1D_SCHEMA if with_strings else ROLLUP_1D_CORE_SCHEMA, wide))
     num_cols = ["doc_key", "hour_idx"] + (["doc_key2"] if wide else [])
     list_cols = {"linked_phase": (T, np.float32),
                  "squeezed": (2 * S, np.float32),
-                 "zstat": (len(_ZSTAT_1D), np.float64)}
+                 "zstat": (len(_ZSTAT_1D.names), np.float64)}
+
+    def extract(batch):
+        num, strs = _extract(batch, num_cols, list_cols, with_strings)
+        _unpack_zstat(num, _ZSTAT_1D)
+        return num, strs
 
     def process(num: dict, lookup) -> pa.RecordBatch:
-        n = num["doc_key"].shape[0]
-        doc_key = num["doc_key"]
-        hour_idx = num["hour_idx"]
-        day = hour_idx // H
-        hid = hour_idx % H
-        key2 = num.get("doc_key2")
-        chg = _group_change(doc_key, day, key2)
-        starts = np.flatnonzero(chg)
-        G = starts.shape[0]
-        gid = np.cumsum(chg) - 1
-
-        sq_in = num["squeezed"]
-        sq = sq_in[:, :S] + 1j * sq_in[:, S:]
-
-        dense = np.zeros((G, H, S), dtype=np.complex64)
-        present = np.zeros((G, H), dtype=bool)
-        dense[gid, hid] = sq
-        present[gid, hid] = True
-        SQ = np.empty(dense.shape, dtype=np.complex64)
-        SQ.real = fill_dense_batch(dense.real, present)
-        SQ.imag = fill_dense_batch(dense.imag, present)
-
-        # datum pass: re-link the squeezed carries (datum_connect A11)
-        vec, quality_1d, day_squeezed = _link_batch(SQ, method)
-        datum = np.angle(vec).astype(np.float32)  # (G, H)
-
-        lp_dense = np.zeros((G, H, T), dtype=np.float32)
-        lp_dense[gid, hid] = num["linked_phase"]
-        adj = np.angle(np.exp(1j * (lp_dense + datum[:, :, None]))).astype(np.float32)
-        adj = adj.reshape(G, H * T)
-
-        ends = np.append(starts[1:], n)
-        n_hours = (ends - starts).astype(np.int32)
-        n_obs = np.add.reduceat(num["n_obs"], starts).astype(np.int32)
-        n_filled = np.add.reduceat(num["n_filled"], starts).astype(np.int32)
-        sum_tok = np.add.reduceat(num["sum_tok"], starts)
-        min_tok = np.minimum.reduceat(num["min_tok"], starts)
-        max_tok = np.maximum.reduceat(num["max_tok"], starts)
-        w_mean = (np.add.reduceat(num["mean_ntok"] * num["n_obs"], starts)
-                  / np.maximum(n_obs, 1))
-        mean_q = (np.add.reduceat(num["quality"].astype(np.float64), starts)
-                  / n_hours)
-
-        day_packed = np.concatenate([day_squeezed.real, day_squeezed.imag], axis=1)
-        _acc_bucket_counts(counts_acc, num["bucket"][starts])
-        arrays = []
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "doc_id"),
-                                   pa.string()))
-        arrays.append(pa.array(doc_key[starts], pa.int64()))
-        if wide:
-            arrays.append(pa.array(key2[starts], pa.int64()))
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "source"),
-                                   pa.string()))
-        arrays += [
-            pa.array(num["bucket"][starts].astype(np.int32)),
-            pa.array(day[starts].astype(np.int32)),
-            pa.array(n_hours),
-            pa.array(n_obs),
-            pa.array(n_filled),
-            pa.array(sum_tok.astype(np.int64)),
-            pa.array(min_tok.astype(np.int32)),
-            pa.array(max_tok.astype(np.int32)),
-            pa.array(w_mean),
-            pa.array(mean_q),
-            pa.array(quality_1d.astype(np.float32)),
-            _list_col(datum),
-            _list_col(adj),
-            _list_col(day_packed.astype(np.float32)),
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+        d = daily_windows(num, cfg)
+        _acc_bucket_counts(counts_acc, d["bucket"])
+        return _record_batch(out_schema,
+                             {**d, **_strings(lookup, d["starts"])},
+                             d["starts"].shape[0])
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, list_cols, with_strings)
-            _unpack_zstat(num, _ZSTAT_1D)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            doc_key = num["doc_key"]
-            day = num["hour_idx"] // H
-            starts = _group_starts(doc_key, day, num.get("doc_key2"))
-            last = starts[-1]
-            n = doc_key.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            num_head = {k: v[:last] for k, v in num.items()}
-            yield process(num_head, lookup)
-        if carry is not None:
-            num = carry.num
-            lookup = (None if carry.strs is None else
-                      [(len(next(iter(num.values()))), carry.strs)])
-            yield process(num, lookup)
+        return stream_groups(batches, extract,
+                             lambda num: num["hour_idx"] // H, process)
 
     return kernel
 

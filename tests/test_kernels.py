@@ -402,3 +402,30 @@ def test_batch_status_without_raw_gufuncs(monkeypatch):
     np.testing.assert_array_equal(iok_fb, iok_raw)
     np.testing.assert_array_equal(inv_fb, inv_raw)   # NaN == NaN here
     assert inv_fb.dtype == inv_raw.dtype
+
+
+def test_regularize_batch_follows_scalar_schedule():
+    """regularize_matrix_batch probes and loads on the scalar
+    regularize_matrix schedule: max_tries probe-then-load rounds, so a
+    matrix needing exactly max_tries loads ends with status 1 and its
+    last load, unprobed. Each matrix has one negative eigenvalue placed
+    half-way between two cumulative loads (1e-6·(2^k − 1)) at a
+    1e-3 scale, far outside float32 rounding, so the float32 batched
+    probe and the double-precision scalar probe decide alike."""
+    rng = np.random.default_rng(11)
+    N = 4
+    loaded = lambda k: 1e-6 * (2 ** k - 1)
+    for max_tries in range(1, 5):
+        mats = []
+        for loads in range(max_tries + 1):
+            lam = (1e-5 if loads == 0
+                   else -(loaded(loads - 1) + loaded(loads)) / 2)
+            Q, _ = np.linalg.qr(rng.normal(size=(N, N)))
+            eig = np.array([lam, 1e-4, 3e-4, 1e-3])
+            mats.append(((Q * eig) @ Q.T).astype(np.float32))
+        M = np.stack(mats)
+        status, out = pl.regularize_matrix_batch(M, max_tries)
+        want = [pl.regularize_matrix(m, max_tries) for m in M]
+        np.testing.assert_array_equal(status, [s for s, _ in want])
+        np.testing.assert_array_equal(out, np.stack([o for _, o in want]))
+        assert status.tolist() == [0] * max_tries + [1]

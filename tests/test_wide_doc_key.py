@@ -7,7 +7,6 @@ narrow mode, and (b) the second key actually separates a planted
 first-key collision."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from miaplpy_spark.config import EngineConfig
 from miaplpy_spark.operators.network_inversion import invert_network
@@ -87,10 +86,20 @@ def test_wide_doc_dim_join_disambiguates(spark):
     assert out.where(F.col("doc_id").isNull()).count() == 0
 
 
-def test_fused_rejects_wide_mode(spark):
+def test_fused_wide_splits_collision_and_matches_tiered(spark):
+    """The fused cascade groups and carries on (doc_key, doc_key2) like
+    the tiered kernels: the planted collision splits into one 1h row per
+    (doc, hour), and both fused tiers equal the tiered wide rows."""
     from miaplpy_spark.operators.fused import rollup_cascade_fused
 
-    obs = fixture_obs(spark, n_docs=2, n_slots=40, n_samples=8,
-                      n_buckets=1)
-    with pytest.raises(ValueError, match="wide_doc_key"):
-        rollup_cascade_fused(obs, WIDE)
+    obs = _collision_obs(spark)
+    fused = rollup_cascade_fused(obs, WIDE)
+    f1h = fused.where("tier = '1h'")
+    per_hour = (f1h.groupBy("hour_idx").count()
+                .agg(F.min("count"), F.max("count")).collect()[0])
+    assert tuple(per_hour) == (2, 2)
+    h_w = rollup_1h(obs, WIDE)
+    d_w = rollup_1d(h_w, WIDE)
+    assert _rows(f1h.select(*h_w.columns), drop=()) == _rows(h_w, drop=())
+    assert (_rows(fused.where("tier = '1d'").select(*d_w.columns), drop=())
+            == _rows(d_w, drop=()))
